@@ -1053,22 +1053,19 @@ def run_bm25_index_probe(spark, sf_dir: str) -> dict:
         mv_init(fresh, corpus.snapshot(), g, m, transform=tok_rows)
         recompute_sec = time.perf_counter() - t0
 
-        # Max-score pruned top-k + bucket-pruned reads (VERDICT r11
-        # next #4 done point), measured at the SERVICE level: a real
-        # Bm25Index over the corpus TxTable — its postings MV
-        # partitioned by the 32-way md5 term bucket — scoring a
-        # 16-query batch that pairs the corpus's most common term with
-        # distinct rare terms.  Three facts published: (a) the pruned
-        # top-k equals full scoring exactly; (b) scored rows track the
-        # rare lists + k, not the common term's df; (c) the bucketed
-        # layout reads only the vocabulary's partitions (files_ratio)
-        # — the posting-list seek that makes BOTH paths scan
-        # O(|vocab buckets|/32) of a 100 TB index.
+        # Service top-k + bucket-pruned reads, measured at the SERVICE
+        # level: a real Bm25Index over the corpus TxTable — its
+        # postings MV partitioned by the 32-way md5 term bucket —
+        # scoring a 16-query batch that pairs the corpus's most common
+        # term with distinct rare terms.  Two facts published: (a) the
+        # service top-k (bucket-pruned read) equals the unpruned-read
+        # top-k exactly; (b) the bucketed layout reads only the
+        # vocabulary's partitions (files_ratio) — the posting-list
+        # seek that scans O(|vocab buckets|/32) of a 100 TB index.
         from pyspark.sql import Window
 
         from ecommerce_data_pipeline_23a91a05i4_spark.operators.text import (
             Bm25Index,
-            _bm25_pruned_plan,
             bm25_scores_from_index,
         )
 
@@ -1092,9 +1089,6 @@ def run_bm25_index_probe(spark, sf_dir: str) -> dict:
         )
         dl = idx.doclen.snapshot().select("doc_id", "dl")
         stats = idx.cstats.snapshot().select("n_docs", "total_tokens")
-        termdf = idx.termdf.snapshot().select(
-            "term", F.col("n_rows").alias("df")
-        )
         full_post = idx.postings.snapshot().select(
             "term", "doc_id", "tf"
         )
@@ -1141,21 +1135,14 @@ def run_bm25_index_probe(spark, sf_dir: str) -> dict:
             e for e in idx.postings.manifest()["files"]
             if e.get("part") in {str(b) for b in buckets}
         ])
-        parts = _bm25_pruned_plan(
-            idx._post_snapshot(qt, "term"), dl, stats, termdf, qt, k,
-            "doc_id", "query_id", "term", 1.2, 0.75, 20,
-        )
         full_matched = full_post.join(
             qt.select("term").distinct(), "term"
         ).count()
-        scored_rows = parts["tf2"].count()
         pruning = {
             "k": k,
             "n_queries": len(rare),
             "index_build_sec": round(build_sec, 4),
             "full_matched_postings": int(full_matched),
-            "pruned_scored_rows": int(scored_rows),
-            "scored_rows_ratio": round(scored_rows / full_matched, 4),
             "postings_files_total": files_total,
             "postings_files_read": files_pruned,
             "files_read_ratio": round(
@@ -1164,20 +1151,9 @@ def run_bm25_index_probe(spark, sf_dir: str) -> dict:
             "full_unpruned_read_topk_sec": round(full_sec, 4),
             "service_pruned_topk_sec": round(pruned_sec, 4),
             "topk_equal": bool(topk_equal),
-            # honest wall-clock reading: after the r13 restructure
-            # (control-plane literals, no-aggregate phase 1, dl
-            # streamed through broadcast joins, distincts dropped) the
-            # pruned wall sits at ~parity with full scoring at fixture
-            # size (r12: 1.74x slower) — the residual is the pruned
-            # plan's inherent extra passes (θ phase + candidate
-            # restriction = 3 bucket-pruned reads) whose fixed stage
-            # costs the skipped rows don't yet repay at ~580k matched
-            # postings.  The crossover sits at production posting-list
-            # sizes.  The published SCALING facts are the row/file
-            # ratios above: scored rows track k + rare lists (0.24x),
-            # reads track vocabulary buckets (0.44x of files), both
-            # independent of the common term's df.
-            "note": "wall ~parity at fixture df; crossover at production df; see ratios",
+            # both sides run the same full scoring + window top-k; the
+            # service side reads only the vocabulary's postings buckets
+            "note": "service = bucket-pruned read, same full-scoring top-k; see files_read_ratio",
         }
         return {
             "pruning": pruning,

@@ -780,19 +780,17 @@ def t99_incremental_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def t101_bm25_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MAX-SCORE top-k pruning over the inverted index (VERDICT r11
-    next #4, operators/text.bm25_topk_from_index): t94's 100
-    corpus-derived two-term queries, but scored through the pruned
-    path — per-term integer upper bounds from the (term, df) relation,
-    a phase-1 θ from each query's highest-bound term, essential-term
-    candidate restriction, exact re-rank — which must return
-    ROW-IDENTICAL top-3 results to t94's full scoring (same integer
-    ranking key, same (score DESC, doc_id) tie-break).  The oracle IS
-    t94's full-scoring replay, so the driver's hash equality is
-    exactly the pruning-exactness theorem checked cross-engine.
-    Common query terms (every 'the'-class token in the top-200 vocab)
-    are the ones the bound prunes; scored-rows-vs-k scaling is
-    measured by the bench probe, exactness is pinned here."""
+    """Top-k over the inverted index (operators/text.bm25_topk_from_index):
+    t94's corpus-derived two-term queries scored through the index
+    entry point — full scoring with the (term, df) relation as the
+    per-term document frequencies, then a per-query row_number()
+    window on (score DESC, doc_id) — which must return ROW-IDENTICAL
+    top-3 results to t94's full text recompute (same integer ranking
+    key, same tie-break).  The oracle IS t94's full-scoring replay,
+    so the driver's hash equality checks the maintained-stats path
+    against the text recompute cross-engine.  (The gate name keeps
+    its history: an earlier max-score pruned plan ran here until it
+    was measured slower than full scoring.)"""
     from ..operators.text import bm25_topk_from_index, tokens
 
     docs = table(spark, sf_dir, "documents")
@@ -800,13 +798,12 @@ def t101_bm25_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("term")
     ).filter(F.col("term") != "")
     # Materialize the derived index relations ONCE (optimization r12,
-    # guide §2.4 duplicated subtrees): the pruned plan consumes
-    # postings three times (θ phase, candidate restriction, re-rank)
-    # and dl/termdf twice — without a checkpoint each branch re-ran
-    # the tokenize-explode-aggregate chain (the before plan re-scanned
-    # documents 38 times).  In the real service (Bm25Index) these ARE
-    # materialized matviews; checkpointing here makes the gate measure
-    # the pruned scoring, which is what t101 pins.
+    # guide §2.4 duplicated subtrees): postings, dl and termdf each
+    # feed more than one relation below (termdf and the query vocab
+    # derive from postings, stats from dl) — without a checkpoint each
+    # consumer re-ran the tokenize-explode-aggregate chain.  In the
+    # real service (Bm25Index) these ARE materialized matviews;
+    # checkpointing here makes the gate measure the index scoring.
     dl = (
         toks_all.groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("dl"))

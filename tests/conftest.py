@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+import warnings
 from pathlib import Path
 
 import pytest
@@ -38,8 +39,10 @@ def pytest_collection_modifyitems(config, items):
     marker by default so the driver-side run completes within its
     budget (VERDICT r12 next #7); sessions run the FULL suite with
     ``-m ""`` (and regenerate the list from ``--durations`` output when
-    the shape shifts).  Data-driven on purpose: no per-test churn, and
-    an entry that stops matching simply stops tagging."""
+    the shape shifts).  Data-driven on purpose: no per-test churn.  An
+    entry that names a collected test file but matches none of its
+    collected tests (renamed or deleted) stops tagging and raises a
+    warning, so the list does not drift silently."""
     listing = Path(__file__).with_name("slowtail.txt")
     if not listing.exists():
         return
@@ -51,3 +54,19 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if item.nodeid in slow:
             item.add_marker(pytest.mark.slowtail)
+    nodeids = {item.nodeid for item in items}
+    files = {nodeid.split("::")[0] for nodeid in nodeids}
+    # a file named down to single tests on the command line is only
+    # partly collected: its other entries are not evidence of drift
+    partial = {
+        Path(arg.split("::")[0]).resolve()
+        for arg in config.args
+        if "::" in arg
+    }
+    for entry in sorted(slow - nodeids):
+        path = entry.split("::")[0]
+        if path in files and (config.rootpath / path).resolve() not in partial:
+            warnings.warn(pytest.PytestWarning(
+                f"tests/slowtail.txt entry matches no collected test: "
+                f"{entry}"
+            ))

@@ -458,12 +458,11 @@ def test_ann_index_scoring_plan_is_clean(spark, tmp_path):
     assert "label" in plan and "PushedFilters" in plan
 
 
-def test_bm25_pruned_topk_plan_is_clean(spark):
-    """bm25_topk_from_index (max-score pruning): bound computation,
-    candidate restriction, and both scoring phases broadcast the
-    query-sized relations — no cartesian beyond the one-row stats
-    broadcast, no Python workers; the postings relation is the only
-    large input."""
+def test_bm25_index_topk_is_lazy_and_adds_no_relations(spark):
+    """bm25_topk_from_index only composes a plan: building it submits
+    no Spark job, and its optimized plan reads nothing but the
+    caller's inputs — no driver-built literal relation (a LogicalRDD
+    of pickled rows runs a Python worker on every execution)."""
     from ecommerce_data_pipeline_23a91a05i4_spark.operators.text import (
         bm25_topk_from_index,
     )
@@ -482,10 +481,38 @@ def test_bm25_pruned_topk_plan_is_clean(spark):
         [("alpha", 2), ("beta", 2)], "term string, df long"
     )
     qt = spark.createDataFrame(
-        [(0, "alpha"), (0, "beta")], "query_id long, term string"
+        [(0, "alpha"), (0, "beta"), (1, None)],
+        "query_id long, term string",
     )
-    out = bm25_topk_from_index(postings, dl, stats, termdf, qt, k=2)
-    plan = explain_str(out)
+    inputs = (postings, dl, stats, termdf, qt)
+
+    def leaves(df):
+        found = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        out = set()
+        for i in range(found.size()):
+            leaf = found.apply(i)
+            name = leaf.getClass().getSimpleName()
+            # LogicalRDD keeps its RDD across self-join re-instancing
+            out.add((name, leaf.rdd().id()) if name == "LogicalRDD"
+                    else (name, leaf.toString()))
+        return out
+
+    own = set().union(*(leaves(df) for df in inputs))
+    assert own  # the probe sees the inputs' relations
+
+    sc = spark.sparkContext
+    group = "test_bm25_index_topk_is_lazy"
+    sc.setJobGroup(group, "build only")
+    try:
+        out = bm25_topk_from_index(postings, dl, stats, termdf, qt, k=2)
+        plan = explain_str(out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert leaves(out) <= own
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "BroadcastHashJoin" in plan
+    assert sorted((r.query_id, r.rank) for r in out.collect()) == [
+        (0, 1), (0, 2)
+    ]

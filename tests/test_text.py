@@ -340,26 +340,26 @@ def test_bm25_index_stamp_rides_refresh_commit(spark, tmp_path):
     assert got_dl == want_dl
 
 
-def test_bm25_maxscore_topk_equals_full_scoring_and_prunes(spark, tmp_path):
-    """Max-score pruned top-k (VERDICT r11 next #4): on a corpus with
-    one wall-to-wall common term and a few rare terms, the pruned
-    path must return EXACTLY the full-scoring top-k (same integer
-    ranking key, same tie-break) while pushing strictly fewer rows
-    through the scoring tail than the full matched-posting count —
-    the scored-rows-scale-with-k property."""
+def test_bm25_index_topk_equals_full_scoring_with_ties_and_null_term(
+    spark, tmp_path
+):
+    """Bm25Index.score(qt, k) is EXACTLY full scoring plus a per-query
+    (score DESC, doc_id) window top-k — on a corpus where the k-th
+    and (k+1)-th scores tie (the doc_id tie-break decides), and with
+    a query row whose term is NULL (matches nothing, never raises)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from ecommerce_data_pipeline_23a91a05i4_spark.operators.text import (
         Bm25Index,
-        _bm25_pruned_plan,
     )
     from ecommerce_data_pipeline_23a91a05i4_spark.sources.txtable import (
         TxTable,
     )
 
     # 40 docs: every doc contains 'common'; doc i%8==0 also contains
-    # 'rare'; assorted mid-frequency terms
+    # 'rare' (5 docs, all of length 5 — equal scores for query 0);
+    # assorted mid-frequency terms
     rows = []
     for i in range(40):
         words = ["common", "common"]
@@ -376,47 +376,33 @@ def test_bm25_maxscore_topk_equals_full_scoring_and_prunes(spark, tmp_path):
     idx.build()
 
     qt = spark.createDataFrame(
-        [(0, "common"), (0, "rare"), (1, "common"), (1, "mid")],
+        [(0, "common"), (0, "rare"), (1, "common"), (1, "mid"),
+         (1, None)],
         "query_id long, term string",
     )
     k = 3
-    pruned = idx.score(qt, k=k)
     full = idx.score(qt)
+    q0 = sorted(
+        (r.score for r in full.filter("query_id = 0").collect()),
+        reverse=True,
+    )
+    assert q0[k - 1] == q0[k]  # a tie straddles the k-th place
     w = Window.partitionBy("query_id").orderBy(
-        F.desc((F.col("score") * (1 << 20)).cast("long")), F.asc("doc_id")
+        F.desc("score"), F.asc("doc_id")
     )
-    full_topk = (
-        full.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "n_terms_matched", "score")
+    want = sorted(
+        map(
+            tuple,
+            full.withColumn("rank", F.row_number().over(w).cast("long"))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "rank", "doc_id", "n_terms_matched",
+                    "score")
+            .collect(),
+        )
     )
-    got = sorted(map(tuple, pruned.collect()))
-    want = sorted(map(tuple, full_topk.collect()))
-    assert got == want and got
-
-    # pruning property: 'common' (df=40) must be non-essential for
-    # query 0 (rare's docs fill the top-3 and common's bound cannot
-    # reach theta), so scored rows < full matched postings
-    parts = _bm25_pruned_plan(
-        idx.postings.snapshot().select("term", "doc_id", "tf"),
-        idx.doclen.snapshot().select("doc_id", "dl"),
-        idx.cstats.snapshot().select("n_docs", "total_tokens"),
-        idx.termdf.snapshot().select(
-            "term", F.col("n_rows").alias("df")
-        ),
-        qt, k, "doc_id", "query_id", "term", 1.2, 0.75, 20,
-    )
-    ess = {
-        (r.query_id, r.term) for r in parts["essential"].collect()
-    }
-    assert (0, "rare") in ess
-    assert (0, "common") not in ess  # the common term got pruned
-    full_matched = (
-        idx.postings.snapshot()
-        .join(qt.select("term").distinct(), "term")
-        .count()
-    )
-    assert parts["tf2"].count() < full_matched
+    got = sorted(map(tuple, idx.score(qt, k=k).collect()))
+    assert got == want
+    assert [r[2] for r in got if r[0] == 0] == [0, 8, 16]
 
 
 def test_bm25_index_bucket_pruned_read_is_exact_and_partial(spark, tmp_path):
