@@ -16,8 +16,9 @@ operators need.  T.81 deliberately leaves IDCT precision
 implementation-defined, so JPEG pixel output is never bit-identical
 across libraries; the contract here is *self-consistency*: this
 decoder's RGB output is the engine's JPEG pixel convention, exactly as
-operators/png.py's output is its PNG convention.  Production swaps the
-seam for Pillow/turbojpeg; nothing above the seam changes.
+operators/png.py's output is its PNG convention.  Bulk decode at scale
+goes through the JVM ImageIO tier (operators/jvmcodec.py) instead,
+which keeps pixel bytes JVM-side.
 
 The encoder exists for fixtures and round-trip tests: baseline, JFIF,
 optional 4:2:0 subsampling and restart intervals, Annex-K quantization

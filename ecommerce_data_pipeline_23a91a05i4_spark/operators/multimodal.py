@@ -4,10 +4,11 @@ Images/audio/video are opaque ``binary`` columns plus typed metadata —
 the lakehouse-native representation (content-addressed, partition-prunable
 by modality/metadata, no external object-store round-trip in the hot
 path).  The Spark-side plumbing — schema, Arrow batch shape, mapInPandas
-signatures, partitioning — is real and tested; the *codec* layer (PIL/
-ffmpeg/soundfile) is not installed in this environment, so decoding is
-stubbed: each decoder either raises NotImplementedError (default) or, in
-``fake=True`` mode, produces a deterministic hash-derived payload so the
+signatures, partitioning — is real and tested.  Images decode through
+vendored PNG/baseline-JPEG codecs (operators/png.py, operators/jpeg.py)
+or the JVM ImageIO tier (operators/jvmcodec.py); audio has no codec
+and its decoder is stubbed.  In ``fake=True`` mode
+every decoder produces a deterministic hash-derived payload so the
 downstream plumbing is exercisable end-to-end.
 
 Scale notes: mapInPandas streams Arrow batches — memory is bounded by
@@ -36,6 +37,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from . import jpeg as _jpeg
+from . import png as _png
+
 MULTIMODAL_SCHEMA = StructType([
     StructField("asset_id", LongType(), False),
     StructField("modality", StringType(), False),  # image | audio | video
@@ -52,65 +56,28 @@ def with_content_sha(df: DataFrame, content_col: str = "content") -> DataFrame:
     return df.withColumn("content_sha", F.sha2(F.col(content_col), 256))
 
 
-try:  # preferred codec, used only when explicitly requested (fake=False)
-    from PIL import Image as _PILImage  # noqa: N814
-except ImportError:  # Pillow absent: the vendored PNG codec takes over
-    _PILImage = None
-
-try:  # fastest JPEG tier: libjpeg-turbo via PyTurboJPEG, when installed
-    from turbojpeg import TJPF_RGB as _TJPF_RGB
-    from turbojpeg import TurboJPEG as _TurboJPEG
-
-    _turbo = _TurboJPEG()  # raises if the native library is absent
-except Exception:  # noqa: BLE001 — any init failure = tier unavailable
-    _turbo = None
-    _TJPF_RGB = None  # unused without _turbo; tests may inject a fake
-
-from . import jpeg as _jpeg
-from . import png as _png
-
-
 def _decode_rgb(content: bytes) -> tuple[int, int, bytes]:
-    """THE codec seam: (width, height, rgb_bytes) through the fastest
-    available tier — libjpeg-turbo for JPEG when PyTurboJPEG is
-    installed, then Pillow when importable (any format), else the
-    vendored pure-Python codecs (operators/png.py for PNG,
-    operators/jpeg.py for baseline JPEG; VERDICT r9 next #2: the
-    vendored JPEG path is deterministic but interpreter-bound at
-    ~3 Mpx/s/core, so a 100 TB media corpus needs this gated swap —
-    the bench codec probe publishes ``fast_jpeg_mpx_per_s`` whenever a
-    fast tier is present).  This seam serves the PYTHON-side operators
-    (the mapInPandas feature/resize paths); for bulk decode prefer
+    """THE codec seam: (width, height, rgb_bytes) through the vendored
+    pure-Python codecs — operators/png.py for PNG, operators/jpeg.py
+    for baseline JPEG (deterministic, but interpreter-bound at
+    ~3 Mpx/s/core).  This seam serves the PYTHON-side operators (the
+    mapInPandas feature/resize paths); for bulk decode prefer
     operators/jvmcodec.decode_images_jvm — the JDK ImageIO tier
     compiled at first use (VERDICT r10 next #5), which keeps pixel
-    bytes entirely JVM-side and is the tier that actually runs in
-    environments where neither turbojpeg nor Pillow can be installed.  decode_image and resize_images both
-    dispatch through here so the two operators can never disagree on
-    which inputs are decodable or on the RGB conversion convention;
-    every tier returns the identical (width, height, w*h*3 RGB bytes)
-    shape, pinned by tests/test_multimodal.py's seam contract tests.
-    JPEG pixel VALUES are decoder-specific by spec (T.81 leaves IDCT
-    precision implementation-defined), so pixel_checksum constancy
-    across tiers is promised for PNG only; the t24 gate pins the
-    fake=True stub and is tier-independent."""
-    if _turbo is not None and _jpeg.is_jpeg(content or b""):
-        arr = _turbo.decode(content, pixel_format=_TJPF_RGB)
-        h, w = arr.shape[:2]
-        return w, h, arr.tobytes()
-    if _PILImage is not None:
-        import io
-
-        with _PILImage.open(io.BytesIO(content or b"")) as im:
-            rgb = im.convert("RGB")
-            return rgb.width, rgb.height, rgb.tobytes()
-    if _png.is_png(content or b""):
-        return _png.decode_png(content or b"")
-    if _jpeg.is_jpeg(content or b""):
-        return _jpeg.decode_jpeg(content or b"")
+    bytes entirely JVM-side and whose rate the bench codec probe
+    publishes as ``fast_jpeg_mpx_per_s``.  decode_image and
+    resize_images both dispatch through here so the two operators can
+    never disagree on which inputs are decodable or on the RGB
+    conversion convention."""
+    data = content or b""
+    if _png.is_png(data):
+        return _png.decode_png(data)
+    if _jpeg.is_jpeg(data):
+        return _jpeg.decode_jpeg(data)
     raise NotImplementedError(
-        "no codec for this format: Pillow is not installed and the "
-        "vendored decoders handle PNG and baseline JPEG only; pass "
-        "fake=True for the deterministic test double"
+        "no codec for this format: the vendored decoders handle PNG and "
+        "baseline JPEG only; pass fake=True for the deterministic test "
+        "double"
     )
 
 
@@ -121,16 +88,14 @@ def decode_image(content: bytes, fake: bool = False) -> dict:
     (dimensions and a pixel checksum derived from the content hash) —
     engine-independent, so t24's static oracle stays pinned to it.
 
-    fake=False decodes for real: Pillow when importable (any format),
-    else the vendored pure-Python codecs — operators/png.py (RGB
-    conversion contract matches PIL.convert("RGB"), so both paths
-    yield the same pixel_checksum for the same PNG) and
-    operators/jpeg.py (baseline sequential JFIF; JPEG pixel output is
-    decoder-specific by spec, so its checksum contract is this
-    engine's own — see that module's docstring).  Other formats
-    without Pillow raise NotImplementedError, malformed inputs raise
-    ValueError — a misconfigured deployment fails loudly instead of
-    producing stub numbers.
+    fake=False decodes for real through the vendored pure-Python
+    codecs — operators/png.py (RGB conversion contract matches
+    PIL.convert("RGB")) and operators/jpeg.py (baseline sequential
+    JFIF; JPEG pixel output is decoder-specific by spec, so its
+    checksum contract is this engine's own — see that module's
+    docstring).  Other formats raise NotImplementedError, malformed
+    inputs raise ValueError — a misconfigured deployment fails loudly
+    instead of producing stub numbers.
     """
     if not fake:
         width, height, pixels = _decode_rgb(content)
@@ -246,7 +211,7 @@ def resize_images(
     fake=True emits a deterministic content-hash-derived payload whose
     length follows 32 + (width*height*3) // 4096 — a documented formula
     so output size is verifiable engine-independently.  fake=False runs
-    the REAL kernel: decode (Pillow, else the vendored PNG codec) →
+    the REAL kernel: decode (the vendored PNG/JPEG codecs) →
     nearest-neighbor resample → PNG re-encode; undecodable inputs raise
     through the codec seam by design."""
     out_len = 32 + (width * height * 3) // 4096
@@ -315,12 +280,12 @@ def sample_video_frames(
     picks the payload:
 
     - ``"rgb"``: the vendored T.81 baseline-JPEG decoder
-      (operators/jpeg.py) — chosen over the tiered _decode_rgb seam
-      ON PURPOSE: JPEG pixel values are decoder-specific by spec, and
-      the vendored tier is the one whose output is deterministic
-      across deployments, which the t25 gate's content hashes pin.
+      (operators/jpeg.py) — called directly ON PURPOSE: JPEG pixel
+      values are decoder-specific by spec, and the vendored decoder's
+      output is deterministic across deployments, which the t25
+      gate's content hashes pin.
     - ``"jpeg"``: the raw '00dc' JPEG payload, undecoded — the scale
-      path: route these bytes to the fastest available tier
+      path: route these bytes to the JVM ImageIO tier
       (operators/jvmcodec.decode_images_jvm keeps them JVM-side).
 
     Unparseable/undecodable assets yield NO rows (a corrupt object in

@@ -1,21 +1,22 @@
 """Vendored pure-Python PNG codec — the minimal real-image fallback.
 
 The multimodal operators keep their pixel work behind a codec seam
-(operators/multimodal.py): Pillow when importable, else this module for
-PNG, else a loud NotImplementedError.  Implemented from the public PNG
+(operators/multimodal.py): this module for PNG, operators/jpeg.py for
+baseline JPEG, else a loud NotImplementedError.  Implemented from the public PNG
 specification (RFC 2083 / W3C PNG): 8-bit-depth, non-interlaced images
 in the five standard color types, with all five scanline filters.  The
 output contract matches ``PIL.Image.convert("RGB")`` — grayscale
 replicates, palette maps through PLTE, and alpha is DISCARDED (not
-composited) — so the Pillow path and this path produce identical RGB
-bytes and therefore identical pixel checksums for the same file.
+composited) — so this path yields the RGB bytes, and therefore the
+pixel checksum, Pillow would for the same file; the JVM ImageIO tier
+(operators/jvmcodec.py) must match it byte-for-byte.
 
 Stdlib (zlib + struct) + numpy: deterministic across platforms.  The
 hot paths are vectorized — inflate is C (zlib), the None/Sub/Up filters
 and all color normalization are whole-array numpy (Sub is a per-lane
 cumsum mod 256), so only the inherently left-sequential Average/Paeth
-scanlines fall back to the scalar loop.  Production replaces the seam
-with Pillow/turbojpeg; nothing above the seam changes.
+scanlines fall back to the scalar loop.  Bulk decode at scale goes
+through the JVM ImageIO tier instead.
 """
 
 from __future__ import annotations

@@ -80,7 +80,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from .txtable import _dv_key
+from .txtable import _file_key
 
 #: manifest ops that restate the same rows in new files (Delta's
 #: dataChange=false): the feed emits nothing for them
@@ -405,7 +405,7 @@ class TxChangeFeedReader(DataSourceStreamReader):
                             self._arrow_schema,
                             dv_mode="visible" if dv_path else None,
                             dv_a=dv_path,
-                            file_key=_dv_key(e) if dv_path else None,
+                            file_key=_file_key(e) if dv_path else None,
                         )
                     )
             for e_old, e_new in dv_changed:
@@ -421,7 +421,7 @@ class TxChangeFeedReader(DataSourceStreamReader):
                             abs_path, "delete", v, self._columns,
                             e_new.get("part"), self._arrow_schema,
                             dv_mode="diff", dv_a=dv_abs(e_new),
-                            dv_b=dv_abs(e_old), file_key=_dv_key(e_new),
+                            dv_b=dv_abs(e_old), file_key=_file_key(e_new),
                         )
                     )
                 if e_old.get("dv"):
@@ -430,7 +430,7 @@ class TxChangeFeedReader(DataSourceStreamReader):
                             abs_path, "insert", v, self._columns,
                             e_old.get("part"), self._arrow_schema,
                             dv_mode="diff", dv_a=dv_abs(e_old),
-                            dv_b=dv_abs(e_new), file_key=_dv_key(e_old),
+                            dv_b=dv_abs(e_new), file_key=_file_key(e_old),
                         )
                     )
         return out

@@ -91,14 +91,15 @@ DATA_DIR = "data"
 _INHERIT = object()
 
 #: internal column names the engine injects at read time: snapshot
-#: (_with_file=True) adds ``_tx_file`` for file-granular DML, so a user
-#: column under that name would collide with the lineage column and
-#: break delete()/merge() on the table.  Enforced at the _commit
+#: (_with_pos=True) adds the ``_tx_key`` / ``_tx_pos`` lineage columns
+#: that deletion vectors and file-granular DML (delete, merge,
+#: delete_dv) key on, so a user column under either name would collide
+#: with them and break DML on the table.  Enforced at the _commit
 #: chokepoint, so EVERY schema-carrying verb (init, overwrite,
 #: add_columns, rename_column) rejects them; append can't introduce
 #: one (its _check_schema exact-match is against a committed schema,
 #: which by this invariant never contains a reserved name).
-_RESERVED_COLS = frozenset({"_tx_file", "_tx_key", "_tx_pos"})
+_RESERVED_COLS = frozenset({"_tx_key", "_tx_pos"})
 
 #: table-metadata manifest fields that must be byte-identical between a
 #: transaction's base manifest and the winning head for a REBASE to be
@@ -198,54 +199,43 @@ class CommitConflict(RuntimeError):
 _COMMIT_DIR_RE = re.compile(r"/(c-[0-9a-f]{32})/")
 
 
-def _commit_rel(path: str) -> str:
-    """A file path reduced to its ``c-<uuid>/...`` suffix — the
-    globally-unique key shared by manifest entries (``data/c-…/rel``)
-    and decoded input_file_name URIs (``…/table/data/c-…/rel``).  The
-    LAST commit-dir component wins, so a table rooted under a path that
-    itself contains a look-alike segment cannot confuse it."""
-    last = None
-    for last in _COMMIT_DIR_RE.finditer(path):
-        pass
-    if last is None:
-        return path
-    return path[last.start() + 1 :]
+#: separator inside file keys — a char no filesystem allows in names,
+#: so the three components can never be confused
+_KEY_SEP = "\x00"
 
 
-#: separator inside deletion-vector file keys — a char no filesystem
-#: allows in names, so the three components can never be confused
-_DV_SEP = "\x00"
-
-
-def _dv_key(e: dict) -> str:
-    """A manifest entry's deletion-vector join key:
+def _file_key(e: dict) -> str:
+    """A manifest entry's file key — what links a scanned row back to
+    its entry (the deletion-vector join key and the hit-file key of
+    delete/merge/delete_dv):
     ``commit-dir \\x00 partition-value \\x00 basename``.  Every
     component is encoding-safe (commit dirs and Spark part filenames
     use [a-zA-Z0-9._-]; the partition VALUE comes from the manifest,
     never from a Hive-escaped dir name), so the Python form here and
-    the Spark form (:func:`_dv_key_col`) agree for any table path or
-    partition value — the property input_file_name-style URI keys do
-    not have."""
+    the Spark form (:func:`_file_key_col`) agree for any table path or
+    partition value, whatever the scan's URI encoding does to the
+    path."""
     path = e["path"]
     last = None
     for last in _COMMIT_DIR_RE.finditer("/" + path):
         pass
     cdir = last.group(1) if last is not None else ""
-    return _DV_SEP.join(
+    return _KEY_SEP.join(
         (cdir, e.get("part") or "", posixpath.basename(path))
     )
 
 
-def _dv_key_col(part_value: str | None):
-    """The Spark-side twin of :func:`_dv_key`, computed from the scan's
-    ``_metadata.file_path`` (greedy ``.*`` prefix = the LAST commit-dir
-    component, matching _commit_rel's last-match rule)."""
+def _file_key_col(part_value: str | None):
+    """The Spark-side twin of :func:`_file_key`, computed from the
+    scan's ``_metadata.file_path`` (greedy ``.*`` prefix = the LAST
+    commit-dir component, matching _file_key's last-match rule, so a
+    table rooted under a look-alike segment cannot confuse it)."""
     fp = F.col("_metadata.file_path")
     return F.concat(
         F.regexp_extract(fp, ".*/(c-[0-9a-f]{32})/", 1),
-        F.lit(_DV_SEP),
+        F.lit(_KEY_SEP),
         F.lit(part_value or ""),
-        F.lit(_DV_SEP),
+        F.lit(_KEY_SEP),
         F.element_at(F.split(fp, "/"), -1),
     )
 
@@ -283,7 +273,7 @@ class TxTable:
         manifest entry records that column's — or, given a list, EVERY
         named column's — [min, max] (ONE extra distributed pass over
         the freshly staged files whatever the column count, grouped by
-        input_file_name), and ``snapshot(prune=(col, lo, hi))`` (or a
+        source file), and ``snapshot(prune=(col, lo, hi))`` (or a
         list of such triples, ANDed) skips files whose ranges cannot
         intersect — the per-file-stats design Delta/Iceberg manifests
         use.  Entries staged without stats (older commits, other
@@ -729,7 +719,6 @@ class TxTable:
     def snapshot(
         self,
         version: int | None = None,
-        _with_file: bool = False,
         prune: tuple | None = None,
         _with_pos: bool = False,
         prune_eq: list[tuple[str, object]] | None = None,
@@ -763,8 +752,9 @@ class TxTable:
         ``TIMESTAMP AS OF``: the state a reader at that moment saw —
         resolved via :meth:`version_at_timestamp`.
 
-        ``_with_file`` (internal, used by :meth:`delete`) appends a
-        ``_tx_file`` column holding each row's source file URI."""
+        ``_with_pos`` (internal, used by the DML verbs) keeps the
+        ``_tx_key`` / ``_tx_pos`` lineage columns (see
+        :meth:`_read_entries`)."""
         if timestamp is not None:
             if version is not None:
                 raise ValueError(
@@ -800,8 +790,7 @@ class TxTable:
                 entries, list(prune_eq), mapping, schema
             )
         return self._read_entries(
-            schema, pcol, entries, _with_file, mapping=mapping,
-            _with_pos=_with_pos,
+            schema, pcol, entries, mapping=mapping, _with_pos=_with_pos
         )
 
     def prune_counts_eq(
@@ -859,7 +848,6 @@ class TxTable:
         schema: StructType,
         pcol: str | None,
         entries: list[dict],
-        _with_file: bool = False,
         mapping: dict[str, str] | None = None,
         _with_pos: bool = False,
         _apply_dvs: bool = True,
@@ -879,8 +867,9 @@ class TxTable:
         the recorded row positions filtered out unless
         ``_apply_dvs=False`` (table_changes' raw diff needs the
         pre-vector rows).  ``_with_pos`` keeps the internal ``_tx_key``
-        / ``_tx_pos`` lineage columns (the vector's join key) in the
-        output."""
+        / ``_tx_pos`` lineage columns in the output: ``_tx_key`` equals
+        :func:`_file_key` of the row's manifest entry (how DML maps hit
+        rows back to entries) and the pair is the vector's join key."""
         phys = mapping or {}
 
         def p(name: str) -> str:
@@ -889,15 +878,11 @@ class TxTable:
         has_dv = _apply_dvs and any(e.get("dv") for e in entries)
         need_pos = _with_pos or has_dv
         sel = [F.col(p(f.name)).alias(f.name) for f in schema.fields]
-        if _with_file:
-            sel.append(F.col("_tx_file"))
         if _with_pos:
             sel.append(F.col("_tx_key"))
             sel.append(F.col("_tx_pos"))
         if not entries:
             out_schema = StructType(schema.fields)
-            if _with_file:
-                out_schema = out_schema.add("_tx_file", "string")
             if _with_pos:
                 out_schema = out_schema.add("_tx_key", "string")
                 out_schema = out_schema.add("_tx_pos", "long")
@@ -911,11 +896,9 @@ class TxTable:
             )
             paths = [self._abs(e) for e in entries]
             out = self.spark.read.schema(phys_schema).parquet(*paths)
-            if _with_file:
-                out = out.withColumn("_tx_file", F.input_file_name())
             if need_pos:
                 out = out.withColumn(
-                    "_tx_key", _dv_key_col(None)
+                    "_tx_key", _file_key_col(None)
                 ).withColumn("_tx_pos", F.col("_metadata.row_index"))
                 if has_dv:
                     out = self._apply_dv(out, entries)
@@ -938,13 +921,10 @@ class TxTable:
             by_val.items(), key=lambda kv: (kv[0] is not None, kv[0] or "")
         ):
             part = self.spark.read.schema(data_schema).parquet(*paths)
-            if _with_file:
-                # input_file_name must bind before the union/literal cols
-                part = part.withColumn("_tx_file", F.input_file_name())
             if need_pos:
-                # _metadata likewise binds per-scan, before the union
+                # _metadata binds per-scan, before the union
                 part = part.withColumn(
-                    "_tx_key", _dv_key_col(val)
+                    "_tx_key", _file_key_col(val)
                 ).withColumn("_tx_pos", F.col("_metadata.row_index"))
             parts.append(part.withColumn(p(pcol), F.lit(val).cast(ptype)))
         out = parts[0]
@@ -1044,6 +1024,18 @@ class TxTable:
             entries.append(
                 {"path": posixpath.join(rel_commit, rel), "part": part}
             )
+        cbase = posixpath.basename(commit_dir)
+
+        def entry_path(uri: str) -> str:
+            # the manifest path of a file the stats/bloom passes saw via
+            # input_file_name: that URI-ENCODES the on-disk path (a
+            # literal space becomes %20, a literal %20 becomes %2520)
+            # while the manifest stores the raw on-disk name, so decode
+            # the URI side once; the suffix under the uuid-named commit
+            # dir is unambiguous
+            dec = unquote(uri.split("://", 1)[-1])
+            return posixpath.join(rel_commit, dec.split("/" + cbase + "/", 1)[1])
+
         pcols = scols  # already physical (resolved above)
         if pcols and entries:
             # ONE distributed pass over the freshly staged files whatever
@@ -1064,23 +1056,18 @@ class TxTable:
                 .agg(*aggs)
                 .collect()
             )
-            # O(1) lookups keyed by the path under the (uuid-unique)
-            # commit dir — decode the URI side once (see delete()'s
-            # note); the manifest path is the raw on-disk name (ADVICE
-            # r5: the nested endswith scan was O(entries × files))
-            cbase = posixpath.basename(commit_dir)
-            by_rel: dict[str, dict] = {}
-            for r in stats_rows:
-                dec = unquote(r._f.split("://", 1)[-1])
-                rel = dec.split("/" + cbase + "/", 1)[1]
-                by_rel[rel] = {
+            # O(1) lookups keyed by manifest path (ADVICE r5: the
+            # nested endswith scan was O(entries × files))
+            by_path = {
+                entry_path(r._f): {
                     c: [r[f"mn_{i}"], r[f"mx_{i}"]]
                     for i, c in enumerate(pcols)
                 }
+                for r in stats_rows
+            }
             kept = []
             for e in entries:
-                rel = e["path"].split("/" + cbase + "/", 1)[1]
-                st = by_rel.get(rel)
+                st = by_path.get(e["path"])
                 if st is None:
                     # ZERO-ROW file (an empty coalesce/partition write):
                     # no group row, nothing to record — and nothing to
@@ -1138,22 +1125,20 @@ class TxTable:
                 .agg(F.collect_set("pos").alias("ps"))
                 .collect()
             )
-            cbase = posixpath.basename(commit_dir)
-            by_rel_bloom: dict[str, dict] = {}
+            by_path_bloom: dict[str, dict] = {}
             for r in pos_rows:
-                dec = unquote(r._f.split("://", 1)[-1])
-                rel = dec.split("/" + cbase + "/", 1)[1]
                 bits = bytearray((m_bits + 7) // 8)
                 for pos in r.ps:
                     bits[pos >> 3] |= 1 << (pos & 7)
-                by_rel_bloom.setdefault(rel, {})[bcols[r.ci]] = {
+                by_path_bloom.setdefault(entry_path(r._f), {})[
+                    bcols[r.ci]
+                ] = {
                     "m": m_bits,
                     "k": k,
                     "b64": base64.b64encode(bytes(bits)).decode("ascii"),
                 }
             for e in entries:
-                rel = e["path"].split("/" + cbase + "/", 1)[1]
-                bl = by_rel_bloom.get(rel)
+                bl = by_path_bloom.get(e["path"])
                 if bl:
                     e["bloom"] = bl
         return entries
@@ -2738,9 +2723,10 @@ class TxTable:
         Column or a SQL string over the table's columns.
 
         Only the files that CONTAIN matching rows are read twice and
-        rewritten (found via input_file_name on a predicate-filtered
-        scan — the same pruning trick Delta's DELETE uses); every other
-        file carries into the child manifest by reference, untouched.
+        rewritten (found by the ``_tx_key`` file key of a
+        predicate-filtered scan — the same pruning trick Delta's DELETE
+        uses); every other file carries into the child manifest by
+        reference, untouched.
         Readers of the parent snapshot are undisturbed, and every
         retained version still time-travels to the pre-delete data —
         vacuum() is what actually destroys the bytes, so a takedown is
@@ -2790,43 +2776,19 @@ class TxTable:
             m = self.manifest()
             pcol = m.get("partition_by")
             schema = StructType.fromJson(json.loads(m["schema"]))
-            snap = self.snapshot(m["version"], _with_file=True)
+            snap = self.snapshot(m["version"], _with_pos=True)
             hit = F.coalesce(pred.cast("boolean"), F.lit(False))
-            hit_uris = [
-                r._tx_file
-                for r in snap.filter(hit).select("_tx_file").distinct().collect()
-            ]
-            if not hit_uris:
-                return m["version"]
-            # map URIs back to manifest entries by their path under the
-            # uuid-named commit dir (globally unique, so the key is
-            # unambiguous — and a dict beats the former O(entries×files)
-            # nested suffix scan, ADVICE r5).  input_file_name
-            # URI-ENCODES the on-disk path (a literal space becomes %20,
-            # a literal %20 becomes %2520), while the manifest stores
-            # the raw on-disk name; decode the URI side ONCE and leave
-            # the manifest side untouched, or any partition value with
-            # an encodable character makes every delete miss its
-            # entries and raise
             hit_keys = {
-                _commit_rel(unquote(u.split("://", 1)[-1])) for u in hit_uris
+                r._tx_key
+                for r in snap.filter(hit).select("_tx_key").distinct().collect()
             }
-            carry = [
-                e for e in m["files"] if _commit_rel(e["path"]) not in hit_keys
-            ]
-            if len(carry) + len(hit_keys) != len(m["files"]):
-                raise RuntimeError(
-                    f"delete on {self.path}: scanned file set does not "
-                    "match the manifest (concurrent vacuum?)"
-                )
-            # survivors re-read from the HIT manifest entries only
-            # (optimization r13 — the former full-snapshot read
-            # filtered on _tx_file re-scanned every file, because
-            # input_file_name cannot prune the file list; this makes
-            # the rewrite O(hit files), the docstring's contract)
-            hit_entries = [
-                e for e in m["files"] if _commit_rel(e["path"]) in hit_keys
-            ]
+            if not hit_keys:
+                return m["version"]
+            carry, hit_entries = self._split_hit_files(
+                "delete", m["files"], hit_keys
+            )
+            # survivors re-read from the HIT manifest entries only, so
+            # the rewrite is O(hit files), the docstring's contract
             survivors = (
                 self._read_entries(
                     schema, pcol, hit_entries, mapping=_col_mapping(m)
@@ -2840,7 +2802,7 @@ class TxTable:
                 # the full scan's partitioning and the mostly-empty
                 # tasks stage empty part files — dead manifest entries
                 # that also read as unprunable under data skipping
-                survivors = survivors.coalesce(max(1, len(hit_uris)))
+                survivors = survivors.coalesce(len(hit_entries))
             staged = self._stage(survivors, pcol, _col_mapping(m), _constraints(m))
             if isolation == "write_serializable":
                 try:
@@ -2859,6 +2821,23 @@ class TxTable:
         raise CommitConflict(
             f"delete on {self.path} lost {max_retries} commit races"
         )
+
+    def _split_hit_files(
+        self, op: str, files: list[dict], hit_keys
+    ) -> tuple[list[dict], list[dict]]:
+        """Split manifest entries into (carry, hit) by :func:`_file_key`
+        against the ``_tx_key`` values a DML scan collected.  A key that
+        names no entry means the scan saw files the manifest no longer
+        lists — raise rather than silently carry or drop them."""
+        carry, hit = [], []
+        for e in files:
+            (hit if _file_key(e) in hit_keys else carry).append(e)
+        if len(hit) != len(hit_keys):
+            raise RuntimeError(
+                f"{op} on {self.path}: scanned file set does not match "
+                "the manifest (concurrent vacuum?)"
+            )
+        return carry, hit
 
     def _stage_dv(self, df: DataFrame) -> str:
         """Write deletion-vector rows (``file_key`` string, ``pos``
@@ -2952,13 +2931,9 @@ class TxTable:
             hit_info = {r._tx_key: (r.hits, r.visible) for r in stats}
             if not hit_info:
                 return m["version"]
-            by_key = {_dv_key(e): e for e in m["files"]}
-            unknown = set(hit_info) - set(by_key)
-            if unknown:
-                raise RuntimeError(
-                    f"delete_dv on {self.path}: scanned file set does "
-                    "not match the manifest (concurrent vacuum?)"
-                )
+            carry, hit_entries = self._split_hit_files(
+                "delete_dv", m["files"], hit_info
+            )
             # the new vector = new hits ∪ the hit files' OLD vector
             # rows (each entry references exactly ONE vector file);
             # entries outside the hit set keep their old reference
@@ -2967,11 +2942,7 @@ class TxTable:
                 F.col("_tx_pos").alias("pos"),
             )
             old_paths = sorted(
-                {
-                    self._dv_abs(by_key[k])
-                    for k in hit_info
-                    if by_key[k].get("dv")
-                }
+                {self._dv_abs(e) for e in hit_entries if e.get("dv")}
             )
             if old_paths:
                 dv_rows = dv_rows.unionByName(
@@ -2980,13 +2951,9 @@ class TxTable:
                     .filter(F.col("file_key").isin(list(hit_info)))
                 )
             dv_rel = self._stage_dv(dv_rows)
-            new_entries = []
-            for e in m["files"]:
-                info = hit_info.get(_dv_key(e))
-                if info is None:
-                    new_entries.append(e)
-                    continue
-                hits_n, visible_n = info
+            new_entries = carry
+            for e in hit_entries:
+                hits_n, visible_n = hit_info[_file_key(e)]
                 if hits_n == visible_n:
                     continue  # fully deleted: drop the entry outright
                 old_n = (e.get("dv") or {}).get("count", 0)
@@ -3230,45 +3197,28 @@ class TxTable:
                 "hit_scan_candidates": len(scan_entries),
             }
             snap = self._read_entries(
-                base_schema, pcol, scan_entries, _with_file=True,
-                mapping=mapping,
+                base_schema, pcol, scan_entries, mapping=mapping,
+                _with_pos=True,
             )
-            hit_uris = [
-                r._tx_file
+            hit_keys = {
+                r._tx_key
                 for r in snap.join(src_keys, on=keys, how="leftsemi")
-                .select("_tx_file")
+                .select("_tx_key")
                 .distinct()
                 .collect()
-            ]
-            if not hit_uris and (ups_empty or not insert_unmatched):
-                return m["version"]  # nothing matched, nothing to insert
-            hit_keys = {
-                _commit_rel(unquote(u.split("://", 1)[-1])) for u in hit_uris
             }
-            carry = [
-                e for e in m["files"] if _commit_rel(e["path"]) not in hit_keys
-            ]
-            if len(carry) + len(hit_keys) != len(m["files"]):
-                raise RuntimeError(
-                    f"merge on {self.path}: scanned file set does not "
-                    "match the manifest (concurrent vacuum?)"
-                )
-            self.last_merge_scan_counts["hit_files"] = len(hit_keys)
+            if not hit_keys and (ups_empty or not insert_unmatched):
+                return m["version"]  # nothing matched, nothing to insert
+            carry, hit_entries = self._split_hit_files(
+                "merge", m["files"], hit_keys
+            )
+            self.last_merge_scan_counts["hit_files"] = len(hit_entries)
             # survivors: unmatched rows of the HIT FILES ONLY (matched
             # rows are replaced by their source version or dropped) —
-            # read back from just those manifest entries (optimization
-            # r13: the former full-snapshot read filtered on _tx_file
-            # re-scanned EVERY file, because input_file_name cannot
-            # prune the file list; re-reading the hit entries makes
-            # the rewrite cost O(hit files), the contract the
-            # docstring promises).  Under in-commit evolution the
-            # rewritten survivors carry the new columns as explicit
-            # NULLs.
-            hit_entries = [
-                e
-                for e in m["files"]
-                if _commit_rel(e["path"]) in hit_keys
-            ]
+            # read back from just those manifest entries, so the
+            # rewrite costs O(hit files), the contract the docstring
+            # promises.  Under in-commit evolution the rewritten
+            # survivors carry the new columns as explicit NULLs.
             survivors = self._read_entries(
                 base_schema, pcol, hit_entries, mapping=mapping
             ).join(src_keys, on=keys, how="left_anti")
@@ -3277,15 +3227,15 @@ class TxTable:
                     f.name, F.lit(None).cast(f.dataType)
                 )
             survivors = survivors.select(data_cols)
-            if pcol is None and hit_uris:
+            if pcol is None and hit_entries:
                 # narrow coalesce, same reason as delete(): without it
                 # the scan's partitioning stages empty part files
-                survivors = survivors.coalesce(max(1, len(hit_uris)))
+                survivors = survivors.coalesce(len(hit_entries))
             if new_fields and evolved_cmap is not _INHERIT:
                 mapping = dict(evolved_cmap)
             cons = _constraints(m) + gen_guards
             staged = (
-                self._stage(survivors, pcol, mapping, cons) if hit_uris else []
+                self._stage(survivors, pcol, mapping, cons) if hit_entries else []
             )
             if not ups_empty:
                 ins = upserts

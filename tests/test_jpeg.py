@@ -116,6 +116,7 @@ def test_codec_seam_dispatches_jpeg():
     # and resize_images' shared seam decodes it too
     w, h, rgb = mm._decode_rgb(enc)
     assert (w, h, len(rgb)) == (12, 7, 12 * 7 * 3)
+    assert (w, h, rgb) == jp.decode_jpeg(enc)  # the vendored decoder
     # undecodable format still loud
     with pytest.raises(NotImplementedError, match="baseline JPEG"):
         mm.decode_image(b"GIF89a...", fake=False)

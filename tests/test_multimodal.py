@@ -44,23 +44,17 @@ def test_extract_features_fake_mode(spark):
 
 def test_decode_real_mode_fails_loudly_on_bad_input(spark):
     """fake=False must never silently fall back to stub numbers: a
-    format no codec handles raises (NotImplementedError without Pillow),
-    and a PNG with a valid signature but corrupt body raises ValueError
-    from the vendored decoder."""
-    if mm._PILImage is None:
-        with pytest.raises(NotImplementedError):
-            mm.decode_image(b"\x89PNG...")  # bad signature -> no codec
-        with pytest.raises(ValueError):
-            # valid signature, truncated body
-            mm.decode_image(pngmod.PNG_SIGNATURE + b"\x00\x00\x00\x0dIHDR")
-        err = "NotImplementedError|codec"
-    else:
-        with pytest.raises(Exception):
-            mm.decode_image(b"\x89PNG...")  # truncated, undecodable
-        err = "cannot identify|Unidentified|image"
+    format no codec handles raises NotImplementedError, and a PNG with
+    a valid signature but corrupt body raises ValueError from the
+    vendored decoder."""
+    with pytest.raises(NotImplementedError):
+        mm.decode_image(b"\x89PNG...")  # bad signature -> no codec
+    with pytest.raises(ValueError):
+        # valid signature, truncated body
+        mm.decode_image(pngmod.PNG_SIGNATURE + b"\x00\x00\x00\x0dIHDR")
     # and the error propagates through the real mapInPandas path
     # (document text bytes are not a decodable image in any codec)
-    with pytest.raises(Exception, match=err):
+    with pytest.raises(Exception, match="NotImplementedError|codec"):
         mm.extract_features(_assets(spark), fake=False).limit(1).collect()
 
 
@@ -70,11 +64,10 @@ def _solid_png(width=20, height=10, color=(255, 0, 0)):
 
 
 def test_decode_image_real_codec_contract():
-    """fake=False decodes a real PNG through the codec seam (Pillow when
-    present, else the vendored decoder) and returns the SAME contract as
-    the stub (width/height/channels/pixel_checksum), with true dimensions
-    and the checksum equal to sha256 over the raw RGB bytes — pinned so
-    the Pillow and vendored paths are interchangeable."""
+    """fake=False decodes a real PNG through the codec seam (the
+    vendored decoder) and returns the SAME contract as the stub
+    (width/height/channels/pixel_checksum), with true dimensions and
+    the checksum equal to sha256 over the raw RGB bytes."""
     import hashlib
 
     png, rgb = _solid_png(20, 10, (255, 0, 0))
@@ -251,61 +244,6 @@ def test_resize_real_kernel_resamples_png(spark):
     assert rows[0].n_bytes == len(rows[0].content)
 
 
-def _gradient_jpeg(w=32, h=24):
-    import numpy as np
-
-    from ecommerce_data_pipeline_23a91a05i4_spark.operators import (
-        jpeg as jpegmod,
-    )
-
-    x = np.linspace(0, 255, w)[None, :].repeat(h, 0)
-    y = np.linspace(0, 255, h)[:, None].repeat(w, 1)
-    img = np.stack([x, y, (x + y) / 2], axis=2).astype(np.uint8)
-    return jpegmod.encode_jpeg(w, h, img.tobytes(), quality=90)
-
-
-def test_seam_fast_tier_shape_parity_when_installed():
-    """When a fast codec tier (turbojpeg/Pillow) is installed, the seam
-    must return the same (width, height, len(rgb)) SHAPE as the
-    vendored decoder for the same JPEG (pixel VALUES are
-    decoder-specific by T.81; shape is the cross-tier contract)."""
-    if mm._turbo is None and mm._PILImage is None:
-        pytest.skip("no fast codec tier installed in this environment")
-    from ecommerce_data_pipeline_23a91a05i4_spark.operators import (
-        jpeg as jpegmod,
-    )
-
-    jpg = _gradient_jpeg()
-    w_f, h_f, rgb_f = mm._decode_rgb(jpg)
-    w_v, h_v, rgb_v = jpegmod.decode_jpeg(jpg)
-    assert (w_f, h_f) == (w_v, h_v) == (32, 24)
-    assert len(rgb_f) == len(rgb_v) == 32 * 24 * 3
-
-
-def test_seam_prefers_fast_tier_wiring(monkeypatch):
-    """The dispatch contract, testable without the libraries: with a
-    fast tier present the seam must route JPEG through it (and return
-    its (w, h, bytes) shape verbatim), never the vendored decoder."""
-    import numpy as np
-
-    jpg = _gradient_jpeg()
-    calls = []
-
-    class _FakeTurbo:
-        def decode(self, content, pixel_format=None):
-            calls.append(len(content))
-            return np.zeros((24, 32, 3), dtype=np.uint8)
-
-    monkeypatch.setattr(mm, "_turbo", _FakeTurbo())
-    w, h, rgb = mm._decode_rgb(jpg)
-    assert calls == [len(jpg)]
-    assert (w, h, len(rgb)) == (32, 24, 32 * 24 * 3)
-    # non-JPEG bytes must NOT hit the turbo tier
-    png, _ = _solid_png(4, 4, (1, 2, 3))
-    w2, h2, rgb2 = mm._decode_rgb(png)
-    assert calls == [len(jpg)] and (w2, h2) == (4, 4)
-
-
 # ----------------------------------------------- JVM ImageIO fast tier
 
 
@@ -350,12 +288,10 @@ def test_jvm_codec_registers_and_decodes(spark):
 
 
 def test_jvm_codec_png_parity_exact_and_jpeg_within_tolerance(spark):
-    """Cross-tier pixel parity, EXECUTED (the turbojpeg/Pillow twin of
-    this test skips here because those libraries are absent — the JVM
-    tier exists precisely so a parity test actually runs): PNG decode
-    is lossless, so the JVM tier must match the vendored codec
-    byte-for-byte; JPEG pixel values may differ only within the small
-    IDCT/upsampling tolerance T.81 permits."""
+    """Cross-tier pixel parity between the vendored codecs and the JVM
+    ImageIO tier: PNG decode is lossless, so the JVM tier must match
+    the vendored codec byte-for-byte; JPEG pixel values may differ
+    only within the small IDCT/upsampling tolerance T.81 permits."""
     import numpy as np
 
     from ecommerce_data_pipeline_23a91a05i4_spark.operators import (

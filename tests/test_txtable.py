@@ -229,29 +229,51 @@ def test_delete_then_vacuum_destroys_predelete_bytes(spark, tmp_path):
 def test_delete_and_stats_survive_uri_encoded_partition_values(
     spark, tmp_path
 ):
-    """input_file_name URI-encodes the on-disk path exactly once
-    (probed: literal space -> %20, on-disk Hive escape %25 -> %2525),
-    while the manifest stores the raw on-disk name.  Deletes touching
-    such partitions must find their manifest entries (not raise
-    'scanned file set does not match'), and staged stats must attach
-    to those files instead of silently vanishing."""
+    """Partition values whose on-disk dir name is URI-encodable (a
+    literal space, a Hive-escaped '%', a '+') while the manifest stores
+    the raw on-disk name.  delete(), merge() and delete_dv() must all
+    find their manifest entries in such partitions (not raise 'scanned
+    file set does not match'), and staged stats must attach to those
+    files instead of silently vanishing."""
     rows = [
-        (1, "north america"), (2, "north america"),  # literal space
-        (3, "50%off"), (4, "50%off"),                # Hive-escaped '%'
+        (1, "north america", "a"), (2, "north america", "b"),  # space
+        (3, "50%off", "c"), (4, "50%off", "d"),                # Hive '%'
+        (5, "a+b", "e"), (6, "a+b", "f"),                      # '+'
     ]
     t = TxTable(spark, str(tmp_path / "t"), stats_col="k")
     t.init(
-        spark.createDataFrame(rows, "k long, region string"),
+        spark.createDataFrame(rows, "k long, region string, v string"),
         partition_by="region",
     )
     m = t.manifest()
     assert any(" " in e["path"] for e in m["files"])    # literal space
     assert any("%25" in e["path"] for e in m["files"])  # escaped '%'
+    assert any("+" in e["path"] for e in m["files"])    # literal '+'
     assert all("stats" in e for e in m["files"])        # stats attached
     t.delete("region = 'north america' AND k = 1")
     t.delete("region = '50%off' AND k = 3")
-    got = sorted((r.k, r.region) for r in t.snapshot().collect())
-    assert got == [(2, "north america"), (4, "50%off")]
+    t.delete("region = 'a+b' AND k = 5")
+    # one update and one insert in each of two encoded partitions; one
+    # source partition, so each region's upserts stage as ONE file
+    src = spark.createDataFrame(
+        [
+            (2, "north america", "upd"), (7, "north america", "new"),
+            (4, "50%off", "upd"), (8, "50%off", "new"),
+        ],
+        "k long, region string, v string",
+    ).coalesce(1)
+    t.merge(src, on="k")
+    assert t.last_merge_scan_counts["hit_files"] == 2
+    # vectors one row of the two-row 'north america' file
+    t.delete_dv("region = 'north america' AND k = 7")
+    assert any(e.get("dv") for e in t.manifest()["files"])
+    got = sorted((r.k, r.region, r.v) for r in t.snapshot().collect())
+    assert got == [
+        (2, "north america", "upd"),
+        (4, "50%off", "upd"),
+        (6, "a+b", "f"),
+        (8, "50%off", "new"),
+    ]
 
 
 def test_data_skipping_stats_prune_safely_and_survive_carry(spark, tmp_path):
@@ -1228,21 +1250,22 @@ def test_widen_column_accepts_ddl_aliases(spark, tmp_path):
 
 
 def test_reserved_internal_column_names_rejected_everywhere(spark, tmp_path):
-    """'_tx_file' is the lineage column snapshot(_with_file=True) injects
-    for file-granular DML; a user column under that name would shadow it
-    and break delete()/merge().  The _commit chokepoint rejects it on
-    every schema-carrying verb (ADVICE r8)."""
+    """'_tx_key' is the lineage column snapshot(_with_pos=True) injects
+    to map hit rows back to manifest entries in file-granular DML; a
+    user column under that name would shadow it and break delete()/
+    merge()/delete_dv().  The _commit chokepoint rejects it on every
+    schema-carrying verb (ADVICE r8)."""
     t = TxTable(spark, str(tmp_path / "t"))
     with pytest.raises(ValueError, match="reserved"):
-        t.init(spark.createDataFrame([(1, "a")], "k long, _tx_file string"))
+        t.init(spark.createDataFrame([(1, "a")], "k long, _tx_key string"))
     t.init(_df(spark, [(1, "a")]))
     with pytest.raises(ValueError, match="reserved"):
-        t.rename_column("v", "_tx_file")
+        t.rename_column("v", "_tx_key")
     with pytest.raises(ValueError, match="reserved"):
-        t.add_columns({"_tx_file": "string"})
+        t.add_columns({"_tx_key": "string"})
     with pytest.raises(ValueError, match="reserved"):
         t.overwrite(
-            spark.createDataFrame([(1, "a")], "k long, _tx_file string")
+            spark.createDataFrame([(1, "a")], "k long, _tx_key string")
         )
     # the table is untouched by the rejected attempts and DML still works
     t.delete(F.col("k") == 1)
